@@ -89,7 +89,18 @@ def main(argv: list[str]) -> None:
         else:
             raise SystemExit(f"unknown flag: {o}")
 
-    spark = SparkSession.builder.appName("memo-correct-turns").getOrCreate()
+    from memo_fraktur_ocr_code_spark.session import (
+        SESSION_CONF,
+        export_to_workers,
+    )
+
+    # the master comes from spark-submit, never a local[...] default
+    spark = (
+        SparkSession.builder.appName("memo-correct-turns")
+        .config(map=SESSION_CONF)
+        .getOrCreate()
+    )
+    export_to_workers(spark)
     from memo_fraktur_ocr_code_spark.plans.checkpoint import (
         completed_buckets,
         run_stage_checkpointed,

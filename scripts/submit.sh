@@ -9,6 +9,8 @@
 #   scripts/submit.sh spark://head:7077 1000 jobs/run_correction.py ...
 #
 # The package ships as a zip via --py-files; no cluster-side install.
+# The session conf (AQE, Arrow, the worker daemon) comes from the job
+# itself (memo_fraktur_ocr_code_spark/session.py SESSION_CONF).
 set -euo pipefail
 
 MASTER="$1"; shift
@@ -25,10 +27,6 @@ exec spark-submit \
   --num-executors "$NUM_EXECUTORS" \
   --executor-cores 4 \
   --executor-memory 16g \
-  --conf spark.sql.adaptive.enabled=true \
-  --conf spark.sql.adaptive.skewJoin.enabled=true \
-  --conf spark.sql.execution.arrow.pyspark.enabled=true \
-  --conf spark.sql.execution.arrow.maxRecordsPerBatch=2048 \
   --conf spark.sql.shuffle.partitions=$((NUM_EXECUTORS * 8)) \
   --py-files "$PKG_ZIP" \
   "$JOB" "$@"
