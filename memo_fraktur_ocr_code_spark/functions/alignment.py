@@ -21,6 +21,21 @@ Re-specified behavior (reference cited; no code copied):
 * alt_ocr_correct         — memoocr/correct_ocr.py:85-156 (selective char
                             transfer from an alternative OCR channel, in
                             250-token chunks)
+
+Fast paths, each output-identical to the form it replaced (property
+twins in tests/test_properties.py):
+
+* ``_matching_blocks`` — difflib's ``get_matching_blocks`` inlined for
+  ``isjunk=None`` and ``len(b) < 200``: autojunk is off there, so no
+  element is junk or popular and the junk/popular extension loops never
+  fire; longer ``b`` falls back to ``SequenceMatcher``.
+* ``_correct_chunk`` — token pairs with ``f == a`` are dropped before the
+  replacement loop: a rule fires on a pair only where ``f`` holds
+  ``fchar`` and ``a`` holds ``achar`` at one index, impossible on equal
+  tokens when ``fchar != achar`` (true of every ``HARD_REPLACEMENTS``
+  rule; a rule with ``fchar == achar`` still sees every pair).
+* ``_iter_align`` — two Allison–Dix bit-parallel LCS sweeps score all
+  binary splits (see its docstring).
 """
 
 from __future__ import annotations
@@ -39,20 +54,80 @@ SPLIT_SEP = "☐"
 JUNK_SEP = "◇"
 
 
+def _matching_blocks(a: tuple, b: tuple) -> list[tuple[int, int, int]]:
+    """``SequenceMatcher(None, a, b).get_matching_blocks()`` as plain
+    ``(i, j, size)`` tuples, terminator included.
+
+    Below 200 elements of ``b`` difflib's autojunk heuristic is off and
+    ``isjunk`` is None, so its ``b2j`` index holds every element: there
+    are no junk or popular elements, the four junk/popular extension
+    loops of ``find_longest_match`` provably never fire (the longest
+    junk-free block is already maximal), and what is left is the longest
+    block recursion below — difflib's own loops, inlined, with the same
+    strict-improvement tie-break and the same block sort and
+    adjacent-block collapse.  From 200 elements on, popular elements
+    exist and ``SequenceMatcher`` runs instead (pinned block-for-block
+    by the property twin in test_properties)."""
+    la, lb = len(a), len(b)
+    if lb >= 200:
+        sm = SequenceMatcher(None, a, b)
+        return [tuple(m) for m in sm.get_matching_blocks()]
+    b2j: dict = {}
+    for j, elt in enumerate(b):
+        b2j.setdefault(elt, []).append(j)
+    nothing: list = []
+    queue = [(0, la, 0, lb)]
+    blocks = []
+    while queue:
+        alo, ahi, blo, bhi = queue.pop()
+        besti, bestj, bestsize = alo, blo, 0
+        j2len: dict = {}
+        for i in range(alo, ahi):
+            j2lenget = j2len.get
+            newj2len = {}
+            for j in b2j.get(a[i], nothing):
+                if j < blo:
+                    continue
+                if j >= bhi:
+                    break
+                k = newj2len[j] = j2lenget(j - 1, 0) + 1
+                if k > bestsize:
+                    besti, bestj, bestsize = i - k + 1, j - k + 1, k
+            j2len = newj2len
+        if bestsize:
+            blocks.append((besti, bestj, bestsize))
+            if alo < besti and blo < bestj:
+                queue.append((alo, besti, blo, bestj))
+            if besti + bestsize < ahi and bestj + bestsize < bhi:
+                queue.append((besti + bestsize, ahi, bestj + bestsize, bhi))
+    blocks.sort()
+    i1 = j1 = k1 = 0
+    out = []
+    for i2, j2, k2 in blocks:
+        if i1 + k1 == i2 and j1 + k1 == j2:
+            k1 += k2
+        else:
+            if k1:
+                out.append((i1, j1, k1))
+            i1, j1, k1 = i2, j2, k2
+    if k1:
+        out.append((i1, j1, k1))
+    out.append((la, lb, 0))
+    return out
+
+
 def get_align_indexes(a: tuple, b: tuple) -> list[tuple[int, int, int, int, bool]]:
     """(ai, aj, bi, bj, is_match) spans covering both sequences, from
     SequenceMatcher matching blocks (align_ocr.py:134-168)."""
-    sm = SequenceMatcher(None, a, b)
-    blocks = sm.get_matching_blocks()
+    blocks = _matching_blocks(a, b)
     if len(blocks) == 1:
-        mb = blocks[0]
-        return [(0, mb.a, 0, mb.b, bool(mb.size))]
+        ai, bi, size = blocks[0]
+        return [(0, ai, 0, bi, bool(size))]
     out: list[tuple[int, int, int, int, bool]] = []
-    for cur, nxt in zip(blocks, blocks[1:]):
-        ai, bi = cur.a, cur.b
-        aj, bj = ai + cur.size, bi + cur.size
+    for (ai, bi, size), (an, bn, _s) in zip(blocks, blocks[1:]):
+        aj, bj = ai + size, bi + size
         out.append((ai, aj, bi, bj, True))
-        out.append((aj, nxt.a, bj, nxt.b, False))
+        out.append((aj, an, bj, bn, False))
     if out[0][0] > 0 or out[0][2] > 0:
         out = [(0, out[0][0], 0, out[0][2], False)] + out
     return out
@@ -75,7 +150,9 @@ def _iter_align(orig_toks: tuple, first_tok: str, rest: tuple) -> list[str]:
     incumbent (the pre-r7 length-bound pruning it replaces was itself
     value-neutral: the bound dominates the ratio, so skipped candidates
     could neither early-exit nor improve the incumbent).  Pinned against
-    the pre-r7 implementation by the property twin in test_kernels."""
+    ``_iter_align_naive`` — a brute-force twin that scores every split
+    with ``indel_ratio`` under the same early exit and strict-improvement
+    rule — by the property tests in test_properties."""
     n = len(orig_toks)
     rest_joined = "".join(rest)
     lf, lr = len(first_tok), len(rest_joined)
@@ -328,11 +405,15 @@ def _correct_chunk(
     alt_str = " ".join(alt_toks)
     corr: dict[str, str] = {}
     tok_pairs = list(zip(frak_toks, alt_toks))
+    # a pair fires only where f has fchar and a has achar at one index,
+    # so for fchar != achar (every HARD_REPLACEMENTS rule) an equal pair
+    # never passes _good_pair and can be dropped up front
+    diff_pairs = [(f, a) for f, a in tok_pairs if f != a]
     for fchar, achar in replacements:
         # chunk-level bail: a pair can only fire if both chars occur
         if fchar not in chunk_str or achar not in alt_str:
             continue
-        for f, a in tok_pairs:
+        for f, a in diff_pairs if fchar != achar else tok_pairs:
             if _good_pair(f, a, fchar, achar, most_frequent):
                 k, v = _correction_pair(f, a, fchar, achar)
                 corr[k] = v

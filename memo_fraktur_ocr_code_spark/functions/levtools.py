@@ -8,8 +8,9 @@ oracle and by the Arrow-batched Spark kernels.
 * indel_ratio   — the ``Levenshtein.ratio`` similarity: substitutions cost
                   2 (pure insert/delete distance), normalized by total
                   length (memoocr/align_ocr.py:47).
-* osa_distance  — optimal-string-alignment distance with early cutoff
-                  (the SymSpell metric; symspellpy uses Damerau-OSA).
+* osa_distance  — optimal-string-alignment distance with band cutoff
+                  (the SymSpell metric; symspellpy uses Damerau-OSA),
+                  computed with Hyyrö's bit-parallel recurrence.
 * cer           — both CER definitions kept distinct
                   (align_ocr.py:33-38 vs add_vrt_annotations.py:361).
 * get_difftype  — memoocr/add_vrt_annotations.py:385-396.
@@ -127,7 +128,19 @@ def osa_distance(a: str, b: str, max_dist: int | None = None) -> int:
 
     Returns ``max_dist + 1`` when the distance exceeds ``max_dist`` (cheap
     band cutoff) — callers treat that as "no match".
-    """
+
+    Hyyrö's bit-parallel OSA (2003): match masks over ``a``, then one
+    bigint update of the vertical/horizontal delta vectors per character
+    of ``b``; the transposition term ``((~D0 & PM) << 1) & PM_prev``
+    marks the cells where ``a[i-1:i+1]`` is ``b[j-1:j+1]`` swapped.  No
+    step moves a bit downward (shifts are left, carries go up), and every
+    ``~`` is masked to the pattern width so the integers stay small and
+    non-negative; the value is the classic O(n·m) DP's (pinned by the
+    ``_osa_distance_dp`` property twin in test_properties).  The DP's
+    row-minimum cutoff could never change the result — OSA row minima
+    are non-decreasing, so the final distance is above ``max_dist``
+    exactly when some row minimum is — hence the cutoff here is applied
+    to the final value only."""
     if a == b:
         return 0
     la, lb = len(a), len(b)
@@ -137,33 +150,29 @@ def osa_distance(a: str, b: str, max_dist: int | None = None) -> int:
         return lb
     if lb == 0:
         return la
-    inf = la + lb
-    prev2: list[int] = []
-    prev = list(range(lb + 1))
-    for i in range(1, la + 1):
-        cur = [i] + [inf] * lb
-        ca = a[i - 1]
-        row_min = i
-        for j in range(1, lb + 1):
-            cost = 0 if ca == b[j - 1] else 1
-            best = min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + cost)
-            if (
-                i > 1
-                and j > 1
-                and ca == b[j - 2]
-                and a[i - 2] == b[j - 1]
-            ):
-                t = prev2[j - 2] + 1
-                if t < best:
-                    best = t
-            cur[j] = best
-            if best < row_min:
-                row_min = best
-        if max_dist is not None and row_min > max_dist:
-            return max_dist + 1
-        prev2 = prev
-        prev = cur
-    d = prev[lb]
+    masks: dict = {}
+    bit = 1
+    for ch in a:
+        masks[ch] = masks.get(ch, 0) | bit
+        bit <<= 1
+    full = bit - 1
+    high = bit >> 1
+    get = masks.get
+    vp, vn, d0, pm_prev = full, 0, 0, 0
+    d = la
+    for ch in b:
+        pm = get(ch, 0)
+        d0 = (((~d0 & pm) << 1) & pm_prev) | (((pm & vp) + vp) ^ vp) | pm | vn
+        hp = vn | (~(d0 | vp) & full)
+        hn = vp & d0
+        if hp & high:
+            d += 1
+        elif hn & high:
+            d -= 1
+        hp = (hp << 1) | 1
+        vp = ((hn << 1) | ~(d0 | hp)) & full
+        vn = hp & d0
+        pm_prev = pm
     if max_dist is not None and d > max_dist:
         return max_dist + 1
     return d

@@ -41,6 +41,8 @@ from memo_fraktur_ocr_code_spark.functions.textspec import (
 
 DEFAULT_MAX_EDIT = 2
 DEFAULT_PREFIX_LEN = 7
+# entry cap of SymSpellIndex._cand_cache (per process; emptied when full)
+CAND_CACHE_CAP = 1 << 17
 
 
 def _deletes(word: str, max_edit: int, out: set[str]) -> set[str]:
@@ -311,8 +313,9 @@ def lookup_candidates(
     overlay lookup score.  ``k=None`` returns all.
 
     Full enumerations (k=None) are memoized on the index (pure in
-    (index, word); the index is immutable after build), capped so a
-    pathological vocabulary cannot grow worker memory unboundedly."""
+    (index, word); the index is immutable after build); the memo is
+    emptied when it reaches ``CAND_CACHE_CAP`` entries, so a pathological
+    vocabulary cannot grow worker memory unboundedly."""
     w = word.lower()
     cache = getattr(index, "_cand_cache", None)
     if k is None and cache is not None:
@@ -339,7 +342,9 @@ def lookup_candidates(
             out.append((d, -index.words[cand], cand))
     out.sort()
     if k is None:
-        if cache is not None and len(cache) < (1 << 17):
+        if cache is not None:
+            if len(cache) >= CAND_CACHE_CAP:
+                cache.clear()
             cache[w] = tuple(out)
         return out
     return out[:k]

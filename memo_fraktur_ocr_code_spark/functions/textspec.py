@@ -18,6 +18,19 @@ tree at /root/reference — behavior only, no code copied):
 * page filtering  — memoocr/correct_ocr.py:398-405, 414-420
 * chunk_list      — myutils/__init__.py:154-156
 * noise/punct     — memoocr/correct_ocr.py:350-353
+
+Fast paths, each output-identical to the reference form (property twins
+in tests/test_properties.py, frozen output digests in
+tests/test_kernel_digest.py):
+
+* ``correct_easy`` — the literal ``re.sub`` chain as ``str.replace`` in
+  the same order, with the five œ rules skipped on œ-free text (they only
+  emit ``æ``, never ``œ``).
+* ``tokenize`` — pad-then-split as a single ``findall``.
+* ``_DEHYPH_RE`` — the dehyphenation match anchored at the start of a
+  word run and taking the run atomically, so a failed attempt no longer
+  backtracks through every suffix of every word (see the pattern's
+  comment for why the matched spans are the same).
 """
 
 from __future__ import annotations
@@ -28,9 +41,10 @@ PAGEBREAK = "___PAGEBREAK___"
 PILCROW_ESCAPE = "___PILCROW___"
 
 # Reference pads this set with spaces before word-splitting
-# (myutils/__init__.py:182).
-_PUNCT_PAD_RE = re.compile(r'([.,:;„“”"»«\'!?()])')
-_WS_RE = re.compile(r"\s+")
+# (myutils/__init__.py:182).  Padding, then splitting on whitespace,
+# yields each punctuation char alone and every maximal run of the other
+# non-whitespace chars — exactly what one findall of this pattern returns.
+_TOKEN_RE = re.compile(r'[.,:;„“”"»«\'!?()]|[^\s.,:;„“”"»«\'!?()]+')
 
 # memoocr/correct_ocr.py:350 — tokens treated as pure noise by the word
 # corrector (suggestion None → original passed through).
@@ -71,12 +85,12 @@ def tokenize(string: str) -> list[str]:
 
     Spec replacement for the reference's NLTK Danish tokenizer
     (myutils/__init__.py:179-187): pad the punctuation class with spaces,
-    then split on whitespace.  NLTK is per-row Python, version-unstable and
-    non-vectorizable; since this tokenizer defines both the pipeline and
-    the gold, per-turn equality holds by construction.
+    then split on whitespace (computed as one ``findall``).  NLTK is
+    per-row Python, version-unstable and non-vectorizable; since this
+    tokenizer defines both the pipeline and the gold, per-turn equality
+    holds by construction.
     """
-    padded = _PUNCT_PAD_RE.sub(r" \1 ", string)
-    return [t for t in _WS_RE.split(padded) if t]
+    return _TOKEN_RE.findall(string)
 
 
 def correct_easy(text: str) -> str:
@@ -85,15 +99,20 @@ def correct_easy(text: str) -> str:
     memoocr/correct_ocr.py:39-43 (œ-family → æ) plus the OCR-stage
     normalizations ſ→s and ",&" → ", &" (memoocr/ocr.py:34).  Order is part
     of the spec.
+
+    Every rule is a literal, so ``str.replace`` (non-overlapping, left to
+    right) is exactly the reference's ``re.sub``; the five œ rules only
+    ever emit ``æ``, so a text without ``œ`` skips them all.
     """
     text = text.replace("ſ", "s")
     text = text.replace(",&", ", &")
-    text = re.sub(r"œæ", "æ", text)
-    text = re.sub(r"æœ", "æ", text)
-    text = re.sub(r"œe", "æ", text)
-    text = re.sub(r"eœ", "æ", text)
-    text = re.sub(r"œ", "æ", text)
-    return text
+    if "œ" not in text:
+        return text
+    text = text.replace("œæ", "æ")
+    text = text.replace("æœ", "æ")
+    text = text.replace("œe", "æ")
+    text = text.replace("eœ", "æ")
+    return text.replace("œ", "æ")
 
 
 # One regexp_replace-compatible view of the same chain, for the Catalyst
@@ -109,7 +128,19 @@ CORRECT_EASY_STEPS: tuple[tuple[str, str], ...] = (
 )
 
 
-_DEHYPH_RE = re.compile(r"(\w+)[\xad⸗—-]+[\n\r\f]*\s*¶\s*(\S+)\s*")
+# ``word<hyphens><line end>¶<next word>`` across a pilcrow boundary.  The
+# reference pattern is ``(\w+)[\xad⸗—-]+[\n\r\f]*\s*¶\s*(\S+)\s*``; tried
+# from every character of every word, its ``\w+`` backtracks down to one
+# character before failing.  This form matches the same spans: a match can
+# only start where a word run starts (a start mid-run fails exactly when
+# the start of the run fails, and the previous match ends after
+# whitespace or at the end), and the run is taken whole and atomically
+# because no shorter run is followed by a hyphen — no hyphen character is
+# ``\w``.  Lookahead + backreference is the Python 3.10 spelling of the
+# possessive ``\w++``, which needs 3.11.
+_DEHYPH_RE = re.compile(
+    r"(?<!\w)(?=(\w+))\1[\xad⸗—-]+[\n\r\f]*\s*¶\s*(\S+)\s*"
+)
 
 
 def fix_hyphens(stringlist: list[str]) -> list[str]:

@@ -36,6 +36,31 @@ from memo_fraktur_ocr_code_spark.operators.wordcorrect import (
 
 _OUT_SCHEMA = "conv_id string, turn_idx int, corrected_text string"
 
+# Entry caps of the partition walk's memos.  Each memo is a pure-function
+# cache, so emptying a full one changes no output byte, only the hit rate;
+# the caps bound a partition's memo memory however many distinct turns it
+# holds.  A turn memo entry holds whole turn texts (easy chain, alt-OCR
+# alignment), a token memo entry one token's suggestion.
+TURN_MEMO_CAP = 1 << 14
+TOKEN_MEMO_CAP = 1 << 17
+
+
+class _BoundedMemo(dict):
+    """A dict that empties itself before an insert that would take it past
+    ``cap`` entries (clear-on-full: no recency bookkeeping on the hit
+    path, which stays a plain C ``dict.get``)."""
+
+    __slots__ = ("cap",)
+
+    def __init__(self, cap: int):
+        super().__init__()
+        self.cap = cap
+
+    def __setitem__(self, key, value):
+        if len(self) >= self.cap:
+            self.clear()
+        dict.__setitem__(self, key, value)
+
 
 def correct_pipeline(
     spark: SparkSession,
@@ -393,6 +418,8 @@ def _correct_pipeline_partition(
     2k-row batches, no per-group pandas construction.
     """
     use_alt = do_hard and alt_transcripts is not None
+    # read on the driver: the kernel closure ships the values
+    turn_cap, token_cap = TURN_MEMO_CAP, TOKEN_MEMO_CAP
     if prebuilt is not None:
         bc_index, bc_guard, bc_bigrams = prebuilt
     else:
@@ -566,9 +593,9 @@ def _correct_pipeline_partition(
         index = bc_index.value if do_sym else None
         mf = bc_guard.value if use_alt else None
         bgc = bc_bigrams.value if bc_bigrams is not None else None
-        memo: dict = {}
-        easy_memo: dict = {}
-        alt_memo: dict = {}
+        memo = _BoundedMemo(token_cap)
+        easy_memo = _BoundedMemo(turn_cap)
+        alt_memo = _BoundedMemo(turn_cap)
         carry: pd.DataFrame | None = None
         for pdf in batches:
             if carry is not None and len(carry):

@@ -6,7 +6,10 @@ No Spark here — pure kernels, fast."""
 
 from __future__ import annotations
 
-from hypothesis import given, settings
+import random
+import re
+
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from memo_fraktur_ocr_code_spark.functions.alignment import (
@@ -209,6 +212,26 @@ def test_iter_align_pruning_is_output_identical(orig, first, rest):
     )
 
 
+_ALIGN_TOKS = st.text(alphabet="abæø☐1", max_size=30)
+
+
+@settings(max_examples=600, deadline=None, derandomize=True)
+@given(
+    st.lists(_ALIGN_TOKS, min_size=1, max_size=8).map(tuple),
+    _ALIGN_TOKS,
+    st.lists(_ALIGN_TOKS, max_size=5).map(tuple),
+)
+def test_iter_align_matches_bruteforce_twin(orig, first, rest):
+    """Wider draw than the pruning pin above: the ☐ padding token_align
+    inserts, non-ASCII chars and joined lengths past 64 (several bigint
+    words in both sweeps)."""
+    from memo_fraktur_ocr_code_spark.functions.alignment import _iter_align
+
+    assert _iter_align(orig, first, rest) == _iter_align_naive(
+        orig, first, rest
+    )
+
+
 # --- overlay lookup ≡ merged-index lookup ----------------------------------
 # The per-conv augmentation avoids rebuilding the 50k-word deletion index
 # by consulting (base, delta) separately; this pins that shortcut to the
@@ -233,3 +256,257 @@ def test_overlay_lookup_equals_merged_index(base_d, delta_d, query):
     got = overlay_lookup_top(query, base, delta, delta_d)
     want = merged.lookup_top(query)
     assert got == want, (base_d, delta_d, query, got, want)
+
+
+# --- fast-path twins -------------------------------------------------------
+# Each rewritten kernel is pinned against the form it replaced, kept here
+# verbatim: the O(n·m) OSA DP, the backtracking dehyphenation pattern,
+# difflib's matching blocks, the re.sub easy chain, pad-and-split
+# tokenizing and the unfiltered chunk loop.
+
+
+def _osa_distance_dp(a: str, b: str, max_dist: int | None = None) -> int:
+    """Classic O(n·m) OSA DP with a row-minimum cutoff — the spec
+    ``levtools.osa_distance`` computes bit-parallel."""
+    if a == b:
+        return 0
+    la, lb = len(a), len(b)
+    if max_dist is not None and abs(la - lb) > max_dist:
+        return max_dist + 1
+    if la == 0:
+        return lb
+    if lb == 0:
+        return la
+    inf = la + lb
+    prev2: list[int] = []
+    prev = list(range(lb + 1))
+    for i in range(1, la + 1):
+        cur = [i] + [inf] * lb
+        ca = a[i - 1]
+        row_min = i
+        for j in range(1, lb + 1):
+            cost = 0 if ca == b[j - 1] else 1
+            best = min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + cost)
+            if i > 1 and j > 1 and ca == b[j - 2] and a[i - 2] == b[j - 1]:
+                t = prev2[j - 2] + 1
+                if t < best:
+                    best = t
+            cur[j] = best
+            if best < row_min:
+                row_min = best
+        if max_dist is not None and row_min > max_dist:
+            return max_dist + 1
+        prev2 = prev
+        prev = cur
+    d = prev[lb]
+    if max_dist is not None and d > max_dist:
+        return max_dist + 1
+    return d
+
+
+_TWIN_ALPHA = "ab_1æØ"
+
+
+@st.composite
+def _edited_pair(draw, alphabet=_TWIN_ALPHA, max_size=90):
+    """(a, b) with b a few random edits — adjacent swaps included — away
+    from a, or unrelated; sizes cross the 64-bit word width."""
+    a = draw(st.text(alphabet=alphabet, max_size=max_size))
+    if draw(st.booleans()):
+        return a, draw(st.text(alphabet=alphabet, max_size=max_size))
+    b = list(a)
+    for _ in range(draw(st.integers(0, 5))):
+        i = draw(st.integers(0, len(b)))
+        op = draw(st.sampled_from("tdis"))
+        if op == "t" and i + 1 < len(b):
+            b[i], b[i + 1] = b[i + 1], b[i]
+        elif op == "d" and i < len(b):
+            del b[i]
+        elif op == "i":
+            b.insert(i, draw(st.sampled_from(alphabet)))
+        elif i < len(b):
+            b[i] = draw(st.sampled_from(alphabet))
+    return a, "".join(b)
+
+
+@settings(max_examples=1500, deadline=None, derandomize=True)
+@given(_edited_pair(), st.sampled_from([None, 0, 1, 2, 3]))
+def test_osa_bitparallel_matches_dp_twin(pair, max_dist):
+    a, b = pair
+    assert osa_distance(a, b, max_dist) == _osa_distance_dp(a, b, max_dist)
+    assert osa_distance(b, a, max_dist) == _osa_distance_dp(b, a, max_dist)
+
+
+def test_osa_bitparallel_matches_dp_twin_examples():
+    long_a = "abæØ" * 20 + "1_"
+    long_b = "baæØ" * 20 + "_1"  # 21 transpositions past bit 64
+    for a, b in [
+        ("ab", "ba"), ("abc", "ca"), ("ca", "abc"), ("æØ", "Øæ"),
+        ("abcd", "badc"), ("a", ""), ("", "ab"), (long_a, long_b),
+        (long_a, long_a[1:]), (long_a + "x", "x" + long_a),
+    ]:
+        for cap in (None, 0, 1, 2, 3, 30):
+            assert osa_distance(a, b, cap) == _osa_distance_dp(a, b, cap), (
+                a, b, cap,
+            )
+
+
+# the reference dehyphenation pattern (myutils/__init__.py:190-200)
+_DEHYPH_REF = re.compile(r"(\w+)[\xad⸗—-]+[\n\r\f]*\s*¶\s*(\S+)\s*")
+_DEHYPH_ALPHA = _TWIN_ALPHA + "\xad⸗—-¶\n\r\f \t.,!"
+_DEHYPH_ATOMS = (
+    "ab", "æØ", "_1", "a", "\xad", "⸗", "—", "-", "--", "¶", "¶¶",
+    "\n", "\r\n", "\f", " ", "  ", "\t", ".", ",", "!",
+)
+
+
+@settings(max_examples=3000, deadline=None, derandomize=True)
+@given(
+    st.one_of(
+        st.text(alphabet=_DEHYPH_ALPHA, max_size=60),
+        st.lists(st.sampled_from(_DEHYPH_ATOMS), max_size=30).map("".join),
+    )
+)
+def test_dehyph_regex_matches_reference_pattern(s):
+    from memo_fraktur_ocr_code_spark.functions.textspec import _DEHYPH_RE
+
+    assert _DEHYPH_RE.sub(r"\1\2¶", s) == _DEHYPH_REF.sub(r"\1\2¶", s)
+
+
+_TOKENS = ("a", "b", "c", "æ", "ø", "¶", "☐")
+
+
+def _seeded_tokens(size_seed):
+    size, seed = size_seed
+    rng = random.Random(seed)
+    return [rng.choice(_TOKENS[:4]) for _ in range(size)]
+
+
+@settings(max_examples=800, deadline=None, derandomize=True)
+@given(
+    st.lists(st.sampled_from(_TOKENS), max_size=40).map(tuple),
+    st.one_of(
+        st.lists(st.sampled_from(_TOKENS), max_size=40),
+        # from 200 elements on, popular elements exist (autojunk); drawn
+        # from a seed, since hypothesis builds long lists slowly
+        st.tuples(st.integers(196, 240), st.integers(0, 2**32)).map(
+            _seeded_tokens
+        ),
+    ).map(tuple),
+)
+def test_matching_blocks_match_sequencematcher(a, b):
+    from difflib import SequenceMatcher
+
+    from memo_fraktur_ocr_code_spark.functions.alignment import (
+        _matching_blocks,
+    )
+
+    want = [tuple(m) for m in SequenceMatcher(None, a, b).get_matching_blocks()]
+    assert _matching_blocks(a, b) == want
+    assert _matching_blocks(b, a) == [
+        tuple(m) for m in SequenceMatcher(None, b, a).get_matching_blocks()
+    ]
+
+
+def _tokenize_ref(string: str) -> list[str]:
+    padded = re.sub(r'([.,:;„“”"»«\'!?()])', r" \1 ", string)
+    return [t for t in re.split(r"\s+", padded) if t]
+
+
+# the punctuation class, ASCII and Unicode whitespace, and near misses
+_TOKENIZE_ALPHA = (
+    'ab æ.,:;„“”"»«\'!?()-¶' + "\n\t\r\x0b\x0c\x1c\x85\xa0\u2003"
+)
+
+
+@settings(max_examples=1500, deadline=None, derandomize=True)
+@given(st.text(alphabet=_TOKENIZE_ALPHA, max_size=40))
+def test_tokenize_matches_pad_and_split(s):
+    assert tokenize(s) == _tokenize_ref(s)
+
+
+def _correct_easy_ref(text: str) -> str:
+    text = text.replace("ſ", "s")
+    text = text.replace(",&", ", &")
+    text = re.sub(r"œæ", "æ", text)
+    text = re.sub(r"æœ", "æ", text)
+    text = re.sub(r"œe", "æ", text)
+    text = re.sub(r"eœ", "æ", text)
+    text = re.sub(r"œ", "æ", text)
+    return text
+
+
+@settings(max_examples=1500, deadline=None, derandomize=True)
+@given(st.text(alphabet="œæeſs,& aE\n", max_size=40))
+def test_correct_easy_matches_regex_chain(s):
+    assert correct_easy(s) == _correct_easy_ref(s)
+
+
+def _correct_chunk_ref(chunk, replacements, most_frequent):
+    from memo_fraktur_ocr_code_spark.functions.alignment import (
+        _correction_pair,
+        _good_pair,
+    )
+
+    frak_toks = tuple(x[0] for x in chunk)
+    alt_toks = tuple(x[1] for x in chunk)
+    chunk_str = " ".join(frak_toks)
+    alt_str = " ".join(alt_toks)
+    corr: dict[str, str] = {}
+    tok_pairs = list(zip(frak_toks, alt_toks))
+    for fchar, achar in replacements:
+        if fchar not in chunk_str or achar not in alt_str:
+            continue
+        for f, a in tok_pairs:
+            if _good_pair(f, a, fchar, achar, most_frequent):
+                k, v = _correction_pair(f, a, fchar, achar)
+                corr[k] = v
+    if not corr:
+        return chunk_str
+    rgx = re.compile(r"\b(" + "|".join(map(re.escape, corr.keys())) + r")\b")
+    return rgx.sub(lambda m: corr[m.group(0)], chunk_str)
+
+
+# a small vocabulary makes the same token meet several partners
+_CHUNK_WORDS = st.one_of(
+    st.sampled_from(("to", "tø", "ta", "tæ", "ok", "øk", "Du", "Øn", "Jt")),
+    st.text(alphabet="oøaæeJItkDØunfl", min_size=1, max_size=5),
+)
+
+
+def _alt_renderings(w):
+    """w itself or w with one replacement rule's char swapped in."""
+    return st.tuples(
+        st.just(w),
+        st.sampled_from(
+            [w] + [w.replace(f, a) for f, a in (("o", "ø"), ("a", "æ"),
+                                                 ("t", "k"), ("u", "n"))]
+        ),
+    )
+
+
+@settings(max_examples=800, deadline=None, derandomize=True)
+@given(
+    st.lists(
+        st.one_of(
+            _CHUNK_WORDS.flatmap(_alt_renderings),
+            st.tuples(_CHUNK_WORDS, _CHUNK_WORDS),
+        ),
+        min_size=1,
+        max_size=12,
+    ),
+    st.frozensets(_CHUNK_WORDS, max_size=4),
+    st.booleans(),
+)
+@example([("to", "tø"), ("to", "to")], frozenset(), True)
+def test_correct_chunk_matches_unfiltered_loop(chunk, most_frequent, self_rule):
+    from memo_fraktur_ocr_code_spark.functions.alignment import _correct_chunk
+    from memo_fraktur_ocr_code_spark.functions.textspec import (
+        HARD_REPLACEMENTS,
+    )
+
+    # a rule with fchar == achar keeps equal pairs in play
+    reps = HARD_REPLACEMENTS + ((("o", "o"),) if self_rule else ())
+    assert _correct_chunk(chunk, reps, most_frequent) == _correct_chunk_ref(
+        chunk, reps, most_frequent
+    )

@@ -28,6 +28,11 @@ import time
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
 CORES = (2, 8)
+# cores for the one-off input materialization: the affinity mask unless
+# SPARK_GRAFT_CPUS overrides
+CPUS = int(
+    os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+)
 INPUT = "/tmp/memo_bench_dedup_input"
 
 
@@ -47,7 +52,7 @@ def materialize(sf_dir: str, factor: int) -> None:
     from pyspark.sql import functions as F
 
     shutil.rmtree(INPUT, ignore_errors=True)
-    spark = _spark("local[32]")
+    spark = _spark(f"local[{CPUS}]")
     try:
         d = spark.read.parquet(f"{sf_dir}/documents.parquet")
         n = d.count()
