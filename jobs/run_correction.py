@@ -89,18 +89,9 @@ def main(argv: list[str]) -> None:
         else:
             raise SystemExit(f"unknown flag: {o}")
 
-    from memo_fraktur_ocr_code_spark.session import (
-        SESSION_CONF,
-        export_to_workers,
-    )
+    from memo_fraktur_ocr_code_spark.session import job_session
 
-    # the master comes from spark-submit, never a local[...] default
-    spark = (
-        SparkSession.builder.appName("memo-correct-turns")
-        .config(map=SESSION_CONF)
-        .getOrCreate()
-    )
-    export_to_workers(spark)
+    spark = job_session("memo-correct-turns")
     from memo_fraktur_ocr_code_spark.plans.checkpoint import (
         completed_buckets,
         run_stage_checkpointed,

@@ -543,9 +543,9 @@ def main(argv: list[str]) -> None:
             resume = True
         else:
             raise SystemExit(f"unknown flag {a}")
-    from memo_fraktur_ocr_code_spark.session import get_spark
+    from memo_fraktur_ocr_code_spark.session import job_session
 
-    spark = get_spark()
+    spark = job_session("memo-curation")
     docs = spark.read.parquet(src)
     bench = spark.read.parquet(bench_path) if bench_path else None
     print(

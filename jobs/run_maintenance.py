@@ -43,7 +43,7 @@ sys.path.insert(
     0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
 
-from memo_fraktur_ocr_code_spark.session import get_spark  # noqa: E402
+from memo_fraktur_ocr_code_spark.session import job_session  # noqa: E402
 from memo_fraktur_ocr_code_spark.sources.bucketed import (  # noqa: E402
     bucket_file_stats,
     compact_bucketed,
@@ -106,11 +106,11 @@ def main(argv: list[str] | None = None) -> dict:
     )
     args = ap.parse_args(argv)
 
-    # NOTE: main() never calls spark.stop() — get_spark is getOrCreate,
+    # NOTE: main() never calls spark.stop() — job_session is getOrCreate,
     # so an in-process caller (tests, a scheduler embedding the job)
     # shares the session and stopping it here would kill the caller's
     # context (code-review r5).  The __main__ guard below stops it.
-    spark = get_spark(app_name="bucket-maintenance")
+    spark = job_session("bucket-maintenance")
     if args.demo:
         return _demo(spark, args.demo)
     if args.snapshot:
@@ -157,4 +157,4 @@ if __name__ == "__main__":
     try:
         main()
     finally:
-        get_spark().stop()
+        job_session("bucket-maintenance").stop()

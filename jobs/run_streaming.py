@@ -455,9 +455,9 @@ def main(argv: list[str]) -> None:
         else:
             raise SystemExit(f"unknown flag {a}")
     from jobs.run_correction import load_lexicon
-    from memo_fraktur_ocr_code_spark.session import get_spark
+    from memo_fraktur_ocr_code_spark.session import job_session
 
-    spark = get_spark()
+    spark = job_session("memo-streaming")
     lexicon = load_lexicon(spark, lexicon_path)
     print(
         json.dumps(

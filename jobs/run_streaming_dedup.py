@@ -293,9 +293,9 @@ def main(argv: list[str]) -> None:
     threshold = 0.5
     if "--threshold" in argv:
         threshold = float(argv[argv.index("--threshold") + 1])
-    from memo_fraktur_ocr_code_spark.session import get_spark
+    from memo_fraktur_ocr_code_spark.session import job_session
 
-    spark = get_spark()
+    spark = job_session("memo-streaming-dedup")
     print(json.dumps(run(spark, src_dir, out_dir, threshold)))
 
 

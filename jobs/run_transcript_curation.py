@@ -518,9 +518,9 @@ def main(argv: list[str]) -> None:
             kw["gap_s"] = int(rest.pop(0))
         else:
             raise SystemExit(f"unknown flag {flag}")
-    from memo_fraktur_ocr_code_spark.session import get_spark
+    from memo_fraktur_ocr_code_spark.session import job_session
 
-    spark = get_spark()
+    spark = job_session("memo-transcript-curation")
     os.makedirs(out_dir, exist_ok=True)
     summary = curate_transcripts(
         spark, spark.read.parquet(src), out_dir, **kw

@@ -213,14 +213,6 @@ def chunk_list(lst: list, n: int) -> list[list]:
     return [lst[i : i + n] for i in range(0, len(lst), n)]
 
 
-def single_line_render(text: str) -> str:
-    """One-line rendering: \\f = pagebreak, \\v = linebreak
-    (memoocr/pages2singlelinefiles.py:16)."""
-    text = text.replace(f" {PAGEBREAK} ", "\f")
-    text = text.replace(PAGEBREAK, "\f")
-    return text.replace("\n", " \v ")
-
-
 def strip_gold_hyphen_markers(text: str) -> str:
     """Remove gold-standard ``[- ]`` hyphen markers
     (memoocr/align_ocr.py:363-369)."""

@@ -1,9 +1,8 @@
 """Catalyst-native scalar text transforms (no Python in the hot path).
 
 These stay entirely inside whole-stage codegen: chained
-``regexp_replace``/``when`` expressions.  Spark mappings of SURVEY.md §2.4
-operators E1 (correct_easy), E9 (gold hyphen-marker strip), E10 (long
-token truncation), E11 (single-line rendering).
+``regexp_replace`` expressions.  Spark mappings of SURVEY.md §2.4
+operators E1 (correct_easy) and E11 (single-line rendering).
 """
 
 from __future__ import annotations
@@ -26,21 +25,6 @@ def correct_easy_col(col: Column | str) -> Column:
     for pat, repl in CORRECT_EASY_STEPS:
         c = F.regexp_replace(c, pat, repl)
     return c
-
-
-def strip_gold_hyphen_markers_col(col: Column | str) -> Column:
-    """E9 — remove gold ``[- ]`` markers (align_ocr.py:363-369)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_replace(c, r"\[[ -]+\]", "")
-
-
-def truncate_long_token_col(col: Column | str, limit: int = 100) -> Column:
-    """E10 — tokens ≥ limit chars become ``tok[:30] + '...'``
-    (add_vrt_annotations.py:290-291)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.when(
-        F.length(c) >= limit, F.concat(F.substring(c, 1, 30), F.lit("..."))
-    ).otherwise(c)
 
 
 def single_line_render_col(col: Column | str) -> Column:

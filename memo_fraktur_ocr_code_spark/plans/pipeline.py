@@ -44,6 +44,33 @@ _OUT_SCHEMA = "conv_id string, turn_idx int, corrected_text string"
 TURN_MEMO_CAP = 1 << 14
 TOKEN_MEMO_CAP = 1 << 17
 
+# Estimated kernel-input bytes per core below which one task per core
+# beats more, smaller tasks: each task after a core's first costs a
+# worker hand-off (~60-90 ms of slot time) that only a big enough task's
+# load balance pays back.  From the num_partitions sweep in CHANGES.md
+# (tools/sweep_kernel_partitions.py, 4-core x86): one task per core won
+# up to 2.8 MB per core, four per core won at 11.1 MB.
+KERNEL_TASK_MIN_BYTES = 4 << 20
+# waves per core when the input is large or its size unknown
+KERNEL_MAX_WAVES = 4
+
+
+def kernel_partitions(parallelism: int, size_bytes: int) -> int:
+    """Partition count of the partition walk's kernel stage: one task
+    wave per core for every ``KERNEL_TASK_MIN_BYTES`` of estimated input
+    per core, at least one wave and at most ``KERNEL_MAX_WAVES``.  An
+    unknown size (Catalyst reports ``Long.MaxValue`` or more) gets the
+    maximum."""
+    waves = -(-size_bytes // (parallelism * KERNEL_TASK_MIN_BYTES))
+    return parallelism * min(max(waves, 1), KERNEL_MAX_WAVES)
+
+
+def _estimated_bytes(df: DataFrame) -> int:
+    """Catalyst's size estimate of ``df``'s analyzed plan: file sizes
+    scaled through projections, ``Long.MaxValue`` per unsized leaf (e.g.
+    ``createDataFrame``).  Reads statistics only; launches no job."""
+    return int(df._jdf.queryExecution().analyzed().stats().sizeInBytes())
+
 
 class _BoundedMemo(dict):
     """A dict that empties itself before an insert that would take it past
@@ -410,6 +437,15 @@ def _correct_pipeline_partition(
     conv_id, sort within partitions, process whole partitions in one
     Arrow kernel.
 
+    The repartition count is ``num_partitions`` when given, else
+    ``kernel_partitions(defaultParallelism, S)`` with ``S`` the analyzed
+    plan's size estimate of the unioned channels:
+    ``P * clamp(ceil(S / (P * KERNEL_TASK_MIN_BYTES)), 1, 4)``.  Small
+    inputs run one Python task per core (every further task on a core
+    costs a worker hand-off that no kernel work pays for); large or
+    unsized inputs (``createDataFrame``: ``Long.MaxValue``) keep four
+    waves per core for load balance.
+
     A conversation can straddle consecutive Arrow batches of the same
     partition; the kernel carries the trailing conversation's rows to the
     next batch and flushes at end-of-partition — bounded state (one conv),
@@ -466,11 +502,13 @@ def _correct_pipeline_partition(
     sort_cols = ["conv_id", "side", "turn_idx"] + (["ts"] if has_ts else [])
     # Explicit partition count: the kernel stage is CPU-bound per row, so
     # AQE's byte-based partition coalescing (64 MB advisory) would collapse
-    # it to a handful of tasks and serialize the Python work.  An explicit
-    # repartition(n, col) pins reducer parallelism to ~4 waves per core
-    # (or the caller's ``num_partitions`` — benchmarks pin it constant
-    # across parallelism levels so both levels do identical physical work).
-    n_part = num_partitions or spark.sparkContext.defaultParallelism * 4
+    # it to a handful of tasks and serialize the Python work.  The count
+    # (see the docstring) is explicit either way; benchmarks pin
+    # ``num_partitions`` across parallelism levels so both levels do
+    # identical physical work.
+    n_part = num_partitions or kernel_partitions(
+        spark.sparkContext.defaultParallelism, _estimated_bytes(u)
+    )
     d = u.repartition(n_part, "conv_id").sortWithinPartitions(*sort_cols)
     if has_ts:
         # ts orders duplicate turn_idx rows within the partition sort; the

@@ -8,8 +8,9 @@ pdf2img.py:25-33), and explicit shuffle parallelism.
 
 ``SESSION_CONF`` holds the conf every session of this package runs
 with, whatever its master: ``get_spark`` (local sessions, tests,
-benches) and ``jobs/run_correction.py`` (spark-submit) both apply it,
-then call ``export_to_workers``.
+benches) and ``job_session`` (the ``main()`` of every job under
+``jobs/``, run through spark-submit) both apply it, then call
+``export_to_workers``.
 
 Python workers run ``worker_daemon`` in place of ``pyspark.daemon``.
 Spark puts ``$SPARK_HOME/python/lib/pyspark.zip``, the py4j zip and the
@@ -68,6 +69,20 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()
+    export_to_workers(spark)
+    return spark
+
+
+def job_session(app_name: str) -> SparkSession:
+    """Session for a job's ``main()``: the master and resources come from
+    spark-submit (plain ``python`` gets pyspark's ``local[*]``), the conf
+    from ``SESSION_CONF``.  Unlike ``get_spark`` it sets no master, so a
+    job submitted to a cluster runs there, not in a local driver."""
+    spark = (
+        SparkSession.builder.appName(app_name)
+        .config(map=SESSION_CONF)
+        .getOrCreate()
+    )
     export_to_workers(spark)
     return spark
 

@@ -2,7 +2,7 @@
 S3-S6), normalized into typed DataFrames:
 
 * frequency dictionaries — ``token count`` space-separated lines
-  (correct_ocr.py:208; bigrams: ``tok1 tok2 count``, make_dictionary.py)
+  (correct_ocr.py:208)
 * metadata TSV — tab-separated with header (myutils/__init__.py:95-117);
   the reference's substring matching is replaced by exact conv_id keys,
   its ``novel_end`` '1000000' sentinel and empty-string NULLs normalized
@@ -31,13 +31,6 @@ def read_freq_dictionary(spark: SparkSession, path: str) -> DataFrame:
     return _strip_bom(df, "token").where(
         F.col("token").isNotNull() & F.col("freq").isNotNull()
     ).orderBy(F.desc("freq"), "token")
-
-
-def read_bigram_dictionary(spark: SparkSession, path: str) -> DataFrame:
-    df = spark.read.csv(
-        path, sep=" ", schema="tok1 string, tok2 string, freq bigint"
-    )
-    return _strip_bom(df, "tok1").where(F.col("freq").isNotNull())
 
 
 def read_metadata_tsv(spark: SparkSession, path: str) -> DataFrame:

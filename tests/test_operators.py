@@ -1021,6 +1021,29 @@ def test_connected_components_matches_union_find_on_random_graphs(spark):
             assert got == want, f"trial {trial} thresh {thresh}"
 
 
+def test_connected_components_rejects_mixed_id_types(spark):
+    """The edge columns are ids of one vertex set: int vs bigint raises a
+    TypeError naming both, on the driver fast path and the star path
+    alike, instead of typing the driver path's labels from one side."""
+    import pytest as _pytest
+
+    from memo_fraktur_ocr_code_spark.operators.dedup import (
+        connected_components,
+    )
+
+    edges = spark.createDataFrame([(1, 2), (2, 3)], "id_a int, id_b bigint")
+    for thresh in (0, 1_000_000):
+        with _pytest.raises(
+            TypeError, match=r"'id_a' \(int\).*'id_b' \(bigint\)"
+        ):
+            connected_components(edges, small_graph_edges=thresh)
+    same = edges.select(F.col("id_a").cast("bigint").alias("id_a"), "id_b")
+    labels = {
+        r.id: r.cluster_id for r in connected_components(same).collect()
+    }
+    assert labels == {1: 1, 2: 1, 3: 1}
+
+
 def test_connected_components_pair_round_budget_is_exact(spark):
     """max_iter is a hard budget: when the inner span loop exhausts it,
     the cadence pair is SKIPPED and convergence is checked between the
